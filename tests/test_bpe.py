@@ -149,6 +149,17 @@ def test_vocab_and_ids_roundtrip(spark):
             .replace(bpe.EOW, " ").strip()
         assert text == " ".join(r["text"].lower().split())
         assert all(i >= 0 for i in r["token_ids"])
+    # ids are the encoder's tokens looked up in the vocab, row by row; the
+    # non-ASCII row carries symbols outside it, which map to unk_id
+    both = spark.createDataFrame([(t,) for t in CORPUS + ["café low"]],
+                                 ["text"])
+    both = bpe.bpe_encode_ids(bpe.bpe_encode(both, "text", merges),
+                              "text", merges, unk_id=-7)
+    rows = both.select("bpe_tokens", "token_ids").collect()
+    assert len(rows) == len(CORPUS) + 1
+    for r in rows:
+        assert r["token_ids"] == [vocab.get(t, -7) for t in r["bpe_tokens"]]
+    assert sum(-7 in r["token_ids"] for r in rows) == 1
 
 
 def test_bpe_decode_roundtrip(spark):

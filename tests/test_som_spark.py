@@ -223,6 +223,39 @@ def test_epoch_fusion_matches_distributed(spark, rand_data):
     dist.train(df, 4)
     np.testing.assert_allclose(fused.get_weights(), dist.get_weights(),
                                atol=1e-9)
+    # the fused fit is the ndarray fit of the collected float32 matrix
+    X32 = np.asarray([r.features for r in df.select("features").collect()],
+                     dtype=np.float32)
+    local = SparkSom(5, 4, 6, random_seed=7, dtype=np.float64).train(X32, 4)
+    np.testing.assert_array_equal(fused.get_weights(), local.get_weights())
+
+
+def test_empty_and_unreached_cells_merge_without_warnings(spark, rand_data):
+    """The merge divides only where a cell has weight: an empty input
+    leaves the codebook unchanged, and a compact bubble neighborhood
+    (cells nobody reaches) trains, both without a RuntimeWarning."""
+    import warnings
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        # py4j's gateway sockets are closed by GC, not by this test
+        warnings.simplefilter("ignore", ResourceWarning)
+        som = SparkSom(5, 4, 6, random_seed=7, dtype=np.float64)
+        w0 = som.get_weights().copy()
+        som.train(np.empty((0, 6), dtype=np.float32), 2)
+        np.testing.assert_array_equal(som.get_weights(), w0)
+
+        empty = make_feature_df(spark, rand_data[:0])
+        som = SparkSom(5, 4, 6, random_seed=7, dtype=np.float64,
+                       fuse_local_bytes=0)
+        som.train(empty, 2)
+        np.testing.assert_array_equal(som.get_weights(), w0)
+
+        som = SparkSom(5, 4, 6, random_seed=7, dtype=np.float64,
+                       neighborhood_function="bubble", compact_support=True)
+        som.train(rand_data, 2)
+        assert np.isfinite(som.get_weights()).all()
+        assert not np.array_equal(som.get_weights(), w0)
 
 
 def test_classify_majority_label(spark):

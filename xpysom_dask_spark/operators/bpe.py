@@ -234,6 +234,23 @@ def _learn_local(word_count: dict, num_merges: int,
     return merges
 
 
+def encode_word(word: str, ranks: dict) -> list[str]:
+    """One word's BPE symbols: start from its characters plus ``EOW``
+    and repeatedly apply the lowest-rank merge present (``ranks`` maps
+    ``"left right"`` to merge rank)."""
+    syms = list(word) + [EOW]
+    while len(syms) > 1:
+        best_i, best_rank = -1, None
+        for i in range(len(syms) - 1):
+            r = ranks.get(syms[i] + " " + syms[i + 1])
+            if r is not None and (best_rank is None or r < best_rank):
+                best_i, best_rank = i, r
+        if best_rank is None:
+            break
+        syms[best_i:best_i + 2] = [syms[best_i] + syms[best_i + 1]]
+    return syms
+
+
 def bpe_encode(df: DataFrame, text_col: str,
                merges: list[tuple[str, str]],
                out_col: str = "bpe_tokens") -> DataFrame:
@@ -256,19 +273,6 @@ def bpe_encode(df: DataFrame, text_col: str,
     ship_package(spark)
     ranks = {f"{l} {r}": i for i, (l, r) in enumerate(merges)}
     bc = spark.sparkContext.broadcast(ranks)
-
-    def encode_word(word: str, rk: dict) -> list[str]:
-        syms = list(word) + [EOW]
-        while len(syms) > 1:
-            best_i, best_rank = -1, None
-            for i in range(len(syms) - 1):
-                r = rk.get(syms[i] + " " + syms[i + 1])
-                if r is not None and (best_rank is None or r < best_rank):
-                    best_i, best_rank = i, r
-            if best_rank is None:
-                break
-            syms[best_i:best_i + 2] = [syms[best_i] + syms[best_i + 1]]
-        return syms
 
     @F.pandas_udf("array<string>")
     def enc(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
@@ -331,19 +335,6 @@ def bpe_encode_ids(df: DataFrame, text_col: str,
     vocab = bpe_vocab(merges) if vocab is None else vocab
     ranks = {f"{l} {r}": i for i, (l, r) in enumerate(merges)}
     bc = spark.sparkContext.broadcast((ranks, vocab, int(unk_id)))
-
-    def encode_word(word: str, rk: dict) -> list[str]:
-        syms = list(word) + [EOW]
-        while len(syms) > 1:
-            best_i, best_rank = -1, None
-            for i in range(len(syms) - 1):
-                r = rk.get(syms[i] + " " + syms[i + 1])
-                if r is not None and (best_rank is None or r < best_rank):
-                    best_i, best_rank = i, r
-            if best_rank is None:
-                break
-            syms[best_i:best_i + 2] = [syms[best_i] + syms[best_i + 1]]
-        return syms
 
     @F.pandas_udf("array<int>")
     def enc_ids(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:

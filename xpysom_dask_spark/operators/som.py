@@ -8,8 +8,9 @@ xpysom.py:72) so a reference user can switch with minimal edits:
   ``array<float>`` features column) — the distributed path, replacing the
   reference's ``use_dask=True`` — or a local ndarray/list-of-lists — the
   reference's host path (ingestion dispatch, xpysom.py:484-510).
-* training is the MLlib-style loop in ``plans.training`` (broadcast
-  codebook → Arrow partials → tree merge), scoring/metrics ride
+* training is the one epoch loop ``plans.training.fit_epochs``, fed by
+  an ndarray or by MLlib-style Spark partials (broadcast codebook →
+  Arrow partials → tree merge), scoring/metrics ride
   ``plans.scoring.attach`` plus plain declarative aggregates that Catalyst
   plans (``groupBy().count()``, ``collect_list``, ``avg`` — SURVEY.md §2.5
   X16, X21-X23).
@@ -59,17 +60,17 @@ class SparkSom:
         tree merge — with more partitions than ``collect_threshold`` the
         per-partition partials are first reduced into ``agg_fanout``
         buckets so the driver never collects O(partitions) tensors.
-    fuse_local_bytes : small-input epoch fusion gate (0 disables).  A
-        batch-SOM epoch is a global reduce, so T epochs are T Spark jobs
-        with an unavoidable driver barrier each; when the whole feature
-        matrix is at most this many bytes the loop instead collects it
-        once (Arrow) and runs every epoch driver-side — one job instead
-        of T, same math chunked by ``batch_rows``.  The default is small
-        on purpose: the fused loop is one core, so it only wins while a
+    fuse_local_bytes : small-input epoch fusion gate (0 disables).  One
+        epoch loop (``plans.training.fit_epochs``) serves every input; a
+        DataFrame feeds it per-cell sums from one Spark job per epoch,
+        each with a driver barrier.  When the whole feature matrix is at
+        most this many bytes it is instead collected once (Arrow) and
+        every epoch reads it through the ndarray source, chunked by
+        ``batch_rows`` — one job instead of T.  The default is small on
+        purpose: the ndarray source is one core, so it only wins while a
         full epoch's FLOPs cost less than one job's scheduling+dispatch
         overhead (~100 ms); measured crossover on local[32] is around
-        10⁵–10⁶ rows.  At scale the gate never fires and the distributed
-        plan is untouched.
+        10⁵–10⁶ rows.  At scale the gate never fires.
     """
 
     def __init__(self, x, y, input_len,
@@ -257,19 +258,21 @@ class SparkSom:
 
     def train(self, data, num_epochs, iter_beg=0, iter_end=None,
               verbose=False):
-        """Batch-SOM training.  DataFrame → distributed epoch loop
-        (plans.training); ndarray/list → local mini-batch loop mirroring
-        the reference's serial path (xpysom.py:560-575)."""
+        """Batch-SOM training: ``plans.training.fit_epochs`` over a
+        DataFrame (``run_training``) or over an ndarray/list chunked by
+        ``batch_rows`` — the reference's serial path
+        (xpysom.py:560-575)."""
+        from ..plans.training import fit_epochs, local_partials, run_training
         if num_epochs < 1:
             raise ValueError("num_iteration must be > 1")
         if iter_end is None:
             iter_end = num_epochs
         if _is_df(data):
-            from ..plans.training import run_training
             return run_training(self, data, num_epochs, iter_beg, iter_end,
                                 verbose)
-        return self._train_local(data, num_epochs, iter_beg, iter_end,
-                                 verbose=verbose)
+        X = self._as_matrix(data, dtype=self.dtype)
+        return fit_epochs(self, local_partials(self, X), num_epochs,
+                          iter_beg, iter_end, verbose)
 
     def _cell_influence(self, sig):
         """(x·y, x·y) neighborhood matrix ``G[k, c]`` = influence of a
@@ -320,40 +323,6 @@ class SparkSom:
             num += Gb.T @ S[b:e]
             den += Gb.T @ c[b:e]
         return num, den
-
-    def _train_local(self, data, num_epochs, iter_beg, iter_end,
-                     verbose=False):
-        from ..plans.training import ProgressPrinter, bmu_cell_sums
-        progress = ProgressPrinter(iter_end - iter_beg) if verbose else None
-        X_all = self._as_matrix(data, dtype=self.dtype)
-        n = len(X_all)
-        shape = self._weights.shape
-        K = self._x * self._y
-        W = self._weights.astype(self.dtype)
-        for t in range(iter_beg, iter_end):
-            w_flat = W.reshape(-1, self._input_len)
-            w_sq = (codebook_sq_norms(w_flat)
-                    if self._distance.can_cache else None)
-            eta = self._decay(self._learning_rate, self._learning_rateN,
-                              t, num_epochs)
-            sig = self._decay(self._sigma, self._sigmaN, t, num_epochs)
-            c = np.zeros(K, dtype=np.float64)
-            S = np.zeros((K, self._input_len), dtype=np.float64)
-            for s in range(0, n, self.batch_rows):
-                X = X_all[s: s + self.batch_rows]
-                idx = self._distance(X, w_flat, w_sq).argmin(axis=1)
-                cc, SS = bmu_cell_sums(X, idx, K)
-                c += cc
-                S += SS
-            num, den = self._apply_influence(S, c, sig, eta)
-            den3 = den.reshape(self._x, self._y)[:, :, None]
-            W = np.where(den3 != 0, num.reshape(shape) / den3,
-                         W).astype(self.dtype)
-            if progress is not None:
-                progress.step(t - iter_beg,
-                              "eta=%.4f sigma=%.4f" % (eta, sig))
-        self._weights = W
-        return self
 
     def train_batch(self, data, num_iteration, verbose=False):
         """MiniSom-compat alias (xpysom.py:597-599)."""

@@ -1,13 +1,14 @@
 """Online SOM training over a stream via ``foreachBatch``.
 
 The reference's batch algorithm (xpysom.py:458-594) folds the whole
-dataset into (numerator, denominator) sums once per epoch.  The same
-update is naturally *incremental*: each micro-batch contributes its own
-(num, den) partials, merged into the codebook with the learning
-rate/radius decayed by micro-batch index — classic online mini-batch
-SOM.  ``foreachBatch`` gives each micro-batch to the existing batch
-training plan (plans/training.py), so the distributed partial+final
-aggregation, broadcastable codebook, and GEMM kernels are all reused.
+dataset into per-cell (numerator, denominator) sums once per epoch.  The
+same update is naturally *incremental*: each micro-batch is one step of
+the batch plan's epoch loop (``plans.training.fit_epochs`` through
+``run_training``), with the learning rate/radius decayed by micro-batch
+index — classic online mini-batch SOM.  The micro-batch feeds that step
+through the same partial-sum sources as a batch fit: collected once to
+the driver under ``fuse_local_bytes``, otherwise one distributed
+``mapInArrow`` job with its broadcast codebook and tree merge.
 
 When the source delivers everything in one micro-batch (e.g.
 ``availableNow`` over a small directory), the result is bit-identical
